@@ -18,9 +18,12 @@ import org.apache.spark.sql.functions._
   *     and personalized 0.3333/0.5166/0.0166 at damping 0.5
   *     (`test_structural.py:395-404`).
   *
-  * Three physical strategies behind one driver loop (north_star):
+  * Physical strategies behind one driver loop (north_star). When the caller
+  * passes none, dense-id graphs (`g.numVertices` set, so ids are `0..n-1`)
+  * run on [[GridBlocks]]`(0)`, one RDD job per superstep; graphs without a
+  * vertex count run on [[EdgeJoin]]. An explicit strategy is always honoured.
   *
-  *  - **EdgeJoin** (default): the row-normalized link table is computed once
+  *  - **EdgeJoin**: the row-normalized link table is computed once
   *    and hash-partitioned by `src`, so the per-superstep `ranks ⋈ links`
   *    join co-locates without reshuffling the (huge) link table; only the
   *    (small) rank vector shuffles. `groupBy(dst).sum` gets map-side partial
@@ -52,6 +55,8 @@ object PageRank {
     * 8 bytes/edge, one two-stage RDD job per superstep. `p = 0` auto-sizes.
     */
   final case class GridBlocks(p: Int = 0) extends Strategy
+  /** No strategy passed: GridBlocks(0) for dense-id graphs, else EdgeJoin. */
+  private case object Unset extends Strategy
 
   final case class Result(ranks: DataFrame, iterations: Int, delta: Double,
       perIterSec: Seq[Double] = Nil)
@@ -61,6 +66,8 @@ object PageRank {
     *              (`test_structural.py:396`).
     * @param fixedIters when set, run exactly this many iterations with no
     *              per-iteration convergence action (SQL-oracle parity mode).
+    * @param strategy physical plan; when omitted, GridBlocks(0) if
+    *              `g.numVertices` is set (dense ids), EdgeJoin otherwise.
     */
   def run(
       g: LinkGraph,
@@ -70,7 +77,7 @@ object PageRank {
       reset: Option[DataFrame] = None,
       fixedIters: Option[Int] = None,
       store: Option[CheckpointStore] = None,
-      strategy: Strategy = EdgeJoin,
+      strategy: Strategy = Unset,
       smallThreshold: Long = 8000000L
   ): Result =
     runFrom(g, initial = None, startIter = 0, damping, tol, maxIter, reset, fixedIters, store, strategy, smallThreshold)
@@ -85,7 +92,7 @@ object PageRank {
       tol: Double = 1e-6,
       maxIter: Int = 100,
       reset: Option[DataFrame] = None,
-      strategy: Strategy = EdgeJoin
+      strategy: Strategy = Unset
   ): Result =
     store.latestIter(g.spark) match {
       case None    => run(g, damping, tol, maxIter, reset, None, Some(store), strategy)
@@ -105,11 +112,6 @@ object PageRank {
       strategy: Strategy,
       smallThreshold: Long = 8000000L
   ): Result = {
-    strategy match {
-      case GridBlocks(p) =>
-        return PageRankGrid.run(g, damping, tol, maxIter, reset, fixedIters, store, initial, startIter, p)
-      case _ =>
-    }
     // Gated driver kernel for the FIXED-ITERATION in-memory uniform-reset
     // mode (the oracle-mirrored mode; r5 kernel posture — Brandes / BZ /
     // fixed-sweep Louvain precedent): a 15-iteration power loop on a
@@ -120,11 +122,13 @@ object PageRank {
     // same uniform init, same reset normalization for personalized runs);
     // per-vertex message sums are IEEE-order-dependent either way (shuffle
     // order varies run to run), and the parity spec pins kernel ==
-    // distributed at 1e-9. Tolerance-mode, durable-store and resumed runs
-    // always stay distributed.
+    // distributed at 1e-9. The gate is checked before the default strategy
+    // is resolved, so it applies to EdgeJoin and to runs that pass no
+    // strategy. Tolerance-mode, durable-store and resumed runs skip it:
+    // they run on the resolved strategy, the grid for dense-id graphs.
     if (fixedIters.isDefined && store.isEmpty && initial.isEmpty
         && g.numVertices.forall(_ <= smallThreshold)
-        && strategy == EdgeJoin) {
+        && (strategy == EdgeJoin || strategy == Unset)) {
       val eDf = g.outView.select("src", "dst", "weight")
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
@@ -217,6 +221,15 @@ object PageRank {
         return Result(out, startIter + iters, Double.MaxValue, Nil)
       }
     }
+    val chosen = strategy match {
+      case Unset => if (g.numVertices.isDefined) GridBlocks(0) else EdgeJoin
+      case s     => s
+    }
+    chosen match {
+      case GridBlocks(p) =>
+        return PageRankGrid.run(g, damping, tol, maxIter, reset, fixedIters, store, initial, startIter, p)
+      case _ =>
+    }
     val vertices = g.vertices.localCheckpoint(true)
     val n = vertices.count()
     require(n > 0, "empty graph")
@@ -227,17 +240,7 @@ object PageRank {
     // happens in the loop so the no-dangling path can fold the reset
     // distribution into the SAME groupBy (one exchange fewer per superstep).
     val persisted = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[_]]
-    val messageRows: DataFrame => DataFrame = strategy match {
-      case EdgeJoin =>
-        val outw = e.groupBy("src").agg(sum("weight").as("outw"))
-        val links = e.join(outw, "src")
-          .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
-          .repartition(col("src")).persist()
-        links.count(); persisted += links
-        ranks =>
-          links.join(ranks, links("src") === ranks("id"))
-            .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
-
+    val messageRows: DataFrame => DataFrame = chosen match {
       case CsrBlocks(p) =>
         val blocks = Csr.build(e, p).persist()
         blocks.count(); persisted += blocks
@@ -263,6 +266,16 @@ object PageRank {
             .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
           tailMsgs.union(hubMsgs)
         }
+
+      case _ => // EdgeJoin (GridBlocks returned above)
+        val outw = e.groupBy("src").agg(sum("weight").as("outw"))
+        val links = e.join(outw, "src")
+          .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
+          .repartition(col("src")).persist()
+        links.count(); persisted += links
+        ranks =>
+          links.join(ranks, links("src") === ranks("id"))
+            .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
     }
     val messages: DataFrame => DataFrame =
       ranks => messageRows(ranks).groupBy("id").agg(sum("m").as("msg"))

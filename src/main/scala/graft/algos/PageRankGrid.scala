@@ -45,15 +45,24 @@ import org.apache.spark.storage.StorageLevel
   *      partial arrays per destination block (communication O(n·P) doubles,
   *      the 1D-partitioned SpMV bound; a √P×√P task grid drops it to
   *      O(n·√P) when P must grow — documented, not needed at sandbox scale)
-  *      and applies `pre' = (1-d)*reset + d*msg`.
+  *      and applies `pre' = (1-d)*reset + d*msg`, summing `pre'` over the
+  *      vertices with out-edges and taking the largest rank change on the
+  *      way.
+  * A durable run adds one snapshot write per superstep
+  * ([[graft.core.CheckpointStore.save]], itself one job).
   *
-  * Dangling-mass trick: a dangling vertex contributes no messages, so with
-  * Σrank = 1 maintained, `danglingMass = 1 - Σmsg` and the true rank is
-  *   `rank[i] = pre[i] + c * reset[i]`  with  `c = 1 - Σpre`
-  * — the correction is a DRIVER SCALAR folded into the next iteration's
-  * `rScaled`, never materialized into the vectors. The per-superstep scalar
-  * (Σpre) rides the same action that materializes the persisted state, so
-  * dangling graphs cost no extra job either.
+  * Dangling-mass trick: a dangling vertex contributes no messages, and every
+  * other vertex sends exactly its rank, so `Σmsg = Σ rank` over vertices with
+  * out-edges and the true rank is
+  *   `rank[i] = pre[i] + c * reset[i]`  with  `c = d * max(0, 1 - Σmsg)`
+  * — the [[PageRank]] update, personalized frames with ids outside `[0, n)`
+  * included (those ids count in the normalizer only). The correction is a
+  * DRIVER SCALAR folded into the next iteration's `rScaled`, never
+  * materialized into the vectors. Σmsg of the next superstep is a sum over
+  * the state this superstep writes, so it rides the same action, and so
+  * does the convergence delta: tolerance-mode and dangling graphs cost no
+  * extra job. Graphs without dangling vertices apply no correction (`c = 0`),
+  * like the EdgeJoin loop.
   *
   * At 10^12 vertices the same layout shards `stride ≤ 2^24` blocks across
   * executors; block-local arrays stay ≤128 MiB and the packed-key space
@@ -117,7 +126,8 @@ object PageRankGrid {
 
   /** Static grid: edge cells + per-source-block inverse out-strength, both
     * partitioned by the SAME HashPartitioner so every superstep zips
-    * partitions without shuffling static data.
+    * partitions without shuffling static data. `dangling` counts the
+    * vertices without out-edges.
     */
   final class Grid(
       val n: Long,
@@ -125,7 +135,8 @@ object PageRankGrid {
       val stride: Int,
       val cells: RDD[CellsBlock],
       val invW: RDD[Array[Double]],
-      val partitioner: HashPartitioner) {
+      val partitioner: HashPartitioner,
+      val dangling: Long) {
 
     def lenOf(b: Int): Int =
       math.min(stride.toLong, n - b.toLong * stride).max(0L).toInt
@@ -218,8 +229,9 @@ object PageRankGrid {
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    cells.count(); invW.count()
-    new Grid(n, p, stride, cells, invW, part)
+    cells.count()
+    val dangling = invW.map(_.count(_ == 0.0).toLong).fold(0L)(_ + _)
+    new Grid(n, p, stride, cells, invW, part, dangling)
   }
 
   /** Trim, sort and index one source block's packed cells (executor-side;
@@ -319,7 +331,10 @@ object PageRankGrid {
         import spark.implicits._
         val tot = r.agg(sum("reset")).head.getDouble(0)
         require(tot > 0.0, "reset vector must not be all zeros")
-        val keyed = r.select(
+        // the normalizer runs over the FULL frame; ids outside [0, n) count
+        // in it only and are dropped before chunking (`id DIV stride` would
+        // otherwise hash them onto a real block)
+        val keyed = r.filter(col("id") >= 0 && col("id") < n).select(
             expr(s"CAST(id DIV $stride AS INT)").as("b"),
             expr(s"CAST(id % $stride AS INT)").as("l"),
             (col("reset") / tot).as("v"))
@@ -332,7 +347,19 @@ object PageRankGrid {
           Iterator.single(arr)
         }, preservesPartitioning = true)
     }).persist(StorageLevel.MEMORY_AND_DISK)
-    resetChunks.count()
+
+    // Σ of a chunked vector (null = uniform) over the vertices with
+    // out-edges: the mass that leaves them as messages
+    def outgoing(v: RDD[Array[Double]]): Double =
+      v.zipPartitions(grid.invW) { (vit, wit) =>
+        val a = vit.next()
+        val iw = wit.next()
+        var s = 0.0
+        var i = 0
+        while (i < iw.length) { if (iw(i) != 0.0) s += (if (a == null) uniform else a(i)); i += 1 }
+        Iterator.single(s)
+      }.sum()
+    val resetOut = outgoing(resetChunks) // materializes the reset chunks
 
     def chunked(df: DataFrame): RDD[(Int, Array[Double])] = {
       import spark.implicits._
@@ -359,8 +386,8 @@ object PageRankGrid {
           Iterator.single((b, Array.fill(len)(uniform)))
         }, preservesPartitioning = true)
     }).persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
     var c = 0.0
+    var preOut = outgoing(state.map(_._2)) // materializes the state
 
     var iter = startIter
     var delta = Double.MaxValue
@@ -371,6 +398,10 @@ object PageRankGrid {
     while (iter < maxI && delta > tol) {
       val t0 = System.currentTimeMillis()
       val cc = c
+      // every vertex with out-edges sends exactly its rank, so Σmsg — and
+      // with it the next state's dangling correction — is known before the
+      // superstep runs; its delta then rides the same job
+      val cNew = if (grid.dangling == 0) 0.0 else d * math.max(0.0, 1.0 - (preOut + cc * resetOut))
 
       // stage 1: per-source-block SpMV into per-destination-block partials
       val msgs: RDD[(Int, Partial)] =
@@ -434,9 +465,10 @@ object PageRankGrid {
 
       // stage 2: block-aligned partial-sum reduce + rank update
       val reduced = msgs.reduceByKey(part, (a: Partial, b: Partial) => a.merge(b))
-      val newFull: RDD[(Int, (Array[Double], Double))] =
-        resetChunks.zipPartitions(reduced, preservesPartitioning = true) { (rit, mit) =>
+      val newFull: RDD[(Int, (Array[Double], Double, Double))] =
+        resetChunks.zipPartitions(grid.invW, state, reduced, preservesPartitioning = true) { (rit, wit, oit, mit) =>
           val ra = rit.next()
+          val iw = wit.next()
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val len = math.min(stride.toLong, (n - pid.toLong * stride).max(0L)).toInt
           val out = new Array[Double](len)
@@ -452,32 +484,27 @@ object PageRankGrid {
               while (i < partial.idx.length) { out(partial.idx(i)) += d * partial.vals(i); i += 1 }
             }
           }
+          // Σ over vertices with out-edges (next superstep's Σmsg) and the
+          // largest change of the true rank
+          val ov = oit.next()._2
           var s = 0.0
-          i = 0; while (i < len) { s += out(i); i += 1 }
-          Iterator.single((pid, (out, s)))
+          var m = 0.0
+          i = 0
+          while (i < len) {
+            if (iw(i) != 0.0) s += out(i)
+            val r = if (ra == null) uniform else ra(i)
+            val dd = math.abs(out(i) + cNew * r - ov(i) - cc * r)
+            if (dd > m) m = dd
+            i += 1
+          }
+          Iterator.single((pid, (out, s, m)))
         }
       newFull.persist(StorageLevel.MEMORY_AND_DISK)
       newFull.localCheckpoint()
-      val sumPre = newFull.map(_._2._2).sum() // materializing action
-      val cNew = math.max(0.0, 1.0 - sumPre)
-
-      if (checkConvergence) {
-        val old = state
-        val oc = c
-        delta = resetChunks.zipPartitions(newFull, old) { (rit, nit, oit) =>
-          val ra = rit.next()
-          if (nit.isEmpty || oit.isEmpty) Iterator.single(0.0)
-          else {
-            val nw = nit.next()._2._1
-            val ov = oit.next()._2
-            var m = 0.0
-            var i = 0
-            if (ra == null) while (i < nw.length) { val dd = math.abs(nw(i) + cNew * uniform - ov(i) - oc * uniform); if (dd > m) m = dd; i += 1 }
-            else while (i < nw.length) { val dd = math.abs(nw(i) + cNew * ra(i) - ov(i) - oc * ra(i)); if (dd > m) m = dd; i += 1 }
-            Iterator.single(m)
-          }
-        }.max()
-      }
+      val (nextOut, change) = newFull.map(x => (x._2._2, x._2._3)) // materializing action
+        .reduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      preOut = nextOut
+      if (checkConvergence) delta = change
 
       val newState = newFull.mapValues(_._1)
       store.foreach { s =>

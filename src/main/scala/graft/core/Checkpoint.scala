@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
-import org.apache.spark.sql.functions._
 
 /** Versioned vertex-state checkpoint store for iterative algorithms.
   *
@@ -14,8 +13,16 @@ import org.apache.spark.sql.functions._
   * `writeTo(table).overwritePartitions()` with `iter` as partition column.
   *
   * Layout:
-  *   root/state/iter=K/        vertex state parquet for iteration K
-  *   root/metrics/             append-only (run_id, iter, partition, rows, ms)
+  *   root/state/iter=K/        vertex state parquet for iteration K, one
+  *                             file per non-empty write partition; its
+  *                             `_SUCCESS` marker is the commit
+  *   root/metrics/             append-only (run_id, iter, partition, rows, ms):
+  *                             one small parquet file per snapshot, written
+  *                             after that snapshot's commit
+  *
+  * A save is ONE Spark job: the state write counts each partition's rows as
+  * it goes (successful task attempts only), and the driver appends the
+  * metrics rows itself.
   */
 final class CheckpointStore(val root: String, val runId: String) {
 
@@ -27,17 +34,15 @@ final class CheckpointStore(val root: String, val runId: String) {
     * superstep barriers).
     */
   def save(spark: SparkSession, iter: Int, state: DataFrame, startedAtMs: Long): DataFrame = {
-    state.write.mode(SaveMode.Overwrite).parquet(stateDir(iter))
-    val reread = spark.read.parquet(stateDir(iter))
-    // per-partition lineage/metrics: rows per parquet file partition
-    val m = reread
-      .withColumn("partition", spark_partition_id())
-      .groupBy("partition").agg(count(lit(1)).as("rows"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("iter", lit(iter))
-      .withColumn("ms", lit(System.currentTimeMillis() - startedAtMs))
-    m.write.mode(SaveMode.Append).parquet(metricsDir)
-    reread
+    val counts = spark.sparkContext.collectionAccumulator[(Int, Long)](s"checkpoint rows iter=$iter")
+    org.apache.spark.sql.execution.GraftLogicalRdd.countingRows(state, counts)
+      .write.mode(SaveMode.Overwrite).parquet(stateDir(iter))
+    val ms = System.currentTimeMillis() - startedAtMs
+    import scala.jdk.CollectionConverters._
+    CheckpointStore.appendMetrics(spark, metricsDir, runId, iter, ms,
+      counts.value.asScala.toMap.toSeq.sortBy(_._1))
+    // the known schema spares the re-read a schema-inference job
+    spark.read.schema(state.schema).parquet(stateDir(iter))
   }
 
   /** Latest checkpointed iteration, if any — the resume point. */
@@ -62,6 +67,45 @@ final class CheckpointStore(val root: String, val runId: String) {
     spark.read.parquet(stateDir(iter))
 
   def metrics(spark: SparkSession): DataFrame = spark.read.parquet(metricsDir)
+}
+
+object CheckpointStore {
+
+  private val MetricsSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+    """message metrics {
+      |  required binary run_id (STRING);
+      |  required int32 iter;
+      |  required int32 partition;
+      |  required int64 rows;
+      |  required int64 ms;
+      |}""".stripMargin)
+
+  /** Append one (run_id, iter, partition, rows, ms) row per `(partition,
+    * rows)` pair to the metrics log, as one parquet file written from the
+    * driver with no Spark job. The file is written under a hidden
+    * `_`-prefixed name and renamed into place, so a reader never sees a
+    * partial file.
+    */
+  private def appendMetrics(spark: SparkSession, dir: String, runId: String, iter: Int,
+                            ms: Long, rows: Seq[(Int, Long)]): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = s"iter-$iter-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = new Path(dir, s"_$file")
+    val fs = tmp.getFileSystem(conf)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withType(MetricsSchema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(MetricsSchema)
+    try rows.foreach { case (part, k) =>
+      writer.write(groups.newGroup().append("run_id", runId).append("iter", iter)
+        .append("partition", part).append("rows", k).append("ms", ms))
+    } finally writer.close()
+    if (!fs.rename(tmp, new Path(dir, file)))
+      throw new java.io.IOException(s"could not publish metrics file $file in $dir")
+  }
 }
 
 /** In-memory lineage truncation for iterative loops.

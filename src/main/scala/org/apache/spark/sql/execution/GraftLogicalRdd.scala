@@ -1,10 +1,13 @@
 package org.apache.spark.sql.execution
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.util.CollectionAccumulator
 
-/** Support shim for [[graft.core.Lineage.cut]] (must live under
-  * `org.apache.spark.sql` to reach the `private[sql]` pieces it rewraps).
+/** Support shims for [[graft.core.Lineage.cut]] and
+  * [[graft.core.CheckpointStore.save]] (must live under
+  * `org.apache.spark.sql` to reach the `private[sql]` pieces they rewrap).
   *
   * `Dataset.localCheckpoint(eager = true)` is exactly the right lineage cut
   * for an iterative superstep loop — it checkpoints the INTERNAL UnsafeRow
@@ -42,5 +45,26 @@ object GraftLogicalRdd {
           LogicalRDD(lr.output, lr.rdd)(ds.sparkSession, None, None))
       case _ => df
     }
+  }
+
+  /** `df` over its own internal rows, counting each partition as it is
+    * drained: a task that finishes partition `i` after `k` rows adds
+    * `(i, k)` to `counts`. Spark merges accumulator updates from successful
+    * task attempts only (once per result partition), so after ONE action
+    * on the returned frame — a write — `counts` holds every partition's row
+    * count with no second job. Executing `df`'s physical plan here runs the
+    * shuffle stages it needs, as writing `df` itself would.
+    */
+  def countingRows(df: org.apache.spark.sql.DataFrame,
+                   counts: CollectionAccumulator[(Int, Long)]): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("countingRows"))(qe.toRdd)
+      .mapPartitionsWithIndex { (pid, it) =>
+        var k = 0L
+        TaskContext.get().addTaskCompletionListener[Unit](_ => counts.add((pid, k)))
+        it.map { r => k += 1; r }
+      }
+    Dataset.ofRows(ds.sparkSession, LogicalRDD(qe.analyzed.output, rows)(ds.sparkSession, None, None))
   }
 }

@@ -65,7 +65,8 @@ class PageRankSpec extends AnyFunSuite {
     // WITH dangling vertices, and a weighted multigraph with a self-loop —
     // smallThreshold = 0 pins the distributed superstep loop as the
     // reference for the r6 gated kernel (same posture as the Brandes /
-    // fixed-sweep Louvain parity specs)
+    // fixed-sweep Louvain parity specs); with dense ids and no strategy
+    // passed, that loop is the grid
     val graphs = Seq(
       LinkGraph.star(spark, 11),
       LinkGraph(spark, 6, Seq((0L, 1L), (0L, 2L), (1L, 3L), (2L, 3L), (4L, 0L)),

@@ -1,7 +1,8 @@
 package graft
 
 import graft.algos.PageRank
-import graft.core.LinkGraph
+import graft.core.{CheckpointStore, LinkGraph}
+import org.apache.spark.EventTap
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The three physical PageRank strategies must agree to float tolerance on
@@ -23,7 +24,8 @@ class StrategySpec extends AnyFunSuite {
 
   test("CSR-block and hub-broadcast PageRank match edge-join to 1e-9") {
     val g = randomGraph(300, 2500)
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 40).ranks, "rank")
+    val base = TestSession.vector(
+      PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.EdgeJoin).ranks, "rank")
     val csr = TestSession.vector(
       PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.CsrBlocks(8)).ranks, "rank")
     val hub = TestSession.vector(
@@ -36,7 +38,8 @@ class StrategySpec extends AnyFunSuite {
 
   test("grid-CSR PageRank matches edge-join to 1e-9 (directed, with dangling)") {
     val g = randomGraph(300, 2500) // remainderUnsigned leaves some ids dangling
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 40).ranks, "rank")
+    val base = TestSession.vector(
+      PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.EdgeJoin).ranks, "rank")
     val grid = TestSession.vector(
       PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.GridBlocks(7)).ranks, "rank")
     base.indices.foreach { i =>
@@ -55,7 +58,8 @@ class StrategySpec extends AnyFunSuite {
     val g = LinkGraph.weighted(spark, 60, edges, directed = true)
     val reset = Some((0 until 60).map(i => (i.toLong, if (i % 7 == 0) 1.0 else 0.0)).toDF("id", "reset"))
     val base = TestSession.vector(
-      PageRank.run(g, damping = 0.5, tol = 1e-12, maxIter = 60, reset = reset).ranks, "rank")
+      PageRank.run(g, damping = 0.5, tol = 1e-12, maxIter = 60, reset = reset,
+        strategy = PageRank.EdgeJoin).ranks, "rank")
     val grid = TestSession.vector(
       PageRank.run(g, damping = 0.5, tol = 1e-12, maxIter = 60, reset = reset,
         strategy = PageRank.GridBlocks(5)).ranks, "rank")
@@ -66,7 +70,8 @@ class StrategySpec extends AnyFunSuite {
 
   test("grid-CSR fixed-iteration mode matches edge-join fixed mode exactly-ish") {
     val g = randomGraph(200, 1500)
-    val base = TestSession.vector(PageRank.run(g, fixedIters = Some(15)).ranks, "rank")
+    val base = TestSession.vector(
+      PageRank.run(g, fixedIters = Some(15), strategy = PageRank.EdgeJoin).ranks, "rank")
     val grid = TestSession.vector(
       PageRank.run(g, fixedIters = Some(15), strategy = PageRank.GridBlocks(0)).ranks, "rank")
     base.indices.foreach { i =>
@@ -76,7 +81,8 @@ class StrategySpec extends AnyFunSuite {
 
   test("grid-CSR handles tiny graphs where most blocks are empty") {
     val g = LinkGraph(spark, 5, Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)), directed = true)
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 80).ranks, "rank")
+    val base = TestSession.vector(
+      PageRank.run(g, tol = 1e-12, maxIter = 80, strategy = PageRank.EdgeJoin).ranks, "rank")
     val grid = TestSession.vector(
       PageRank.run(g, tol = 1e-12, maxIter = 80, strategy = PageRank.GridBlocks(0)).ranks, "rank")
     base.indices.foreach(i => assert(math.abs(base(i) - grid(i)) < 1e-9))
@@ -96,5 +102,55 @@ class StrategySpec extends AnyFunSuite {
       PageRank.run(g, tol = 1e-10, maxIter = 200, strategy = PageRank.CsrBlocks(4)).ranks, "rank")
     assert(math.abs(v.max - 0.4668) < 5e-4)
     assert(v.indexOf(v.max) == 0)
+  }
+
+  test("grid drops personalized reset ids outside [0, n) and matches edge-join") {
+    import spark.implicits._
+    // 999 and -3 lie outside the vertex set: they count in the normalizer
+    // only. A 4-cycle with a chord has no dangling vertex; the random
+    // 10-vertex graph has some.
+    val graphs = Seq(
+      LinkGraph(spark, 10, Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (4L, 5L), (5L, 6L), (6L, 7L),
+        (7L, 8L), (8L, 9L), (9L, 4L), (2L, 7L)), directed = true),
+      randomGraph(10, 14))
+    val reset = Some(Seq((2L, 1.0), (7L, 0.5), (999L, 1.0), (-3L, 0.5)).toDF("id", "reset"))
+    for (g <- graphs) {
+      // smallThreshold = 0 keeps the edge-join run off the driver kernel
+      val base = TestSession.vector(PageRank.run(g, fixedIters = Some(20), reset = reset,
+        strategy = PageRank.EdgeJoin, smallThreshold = 0L).ranks, "rank")
+      val grid = TestSession.vector(PageRank.run(g, fixedIters = Some(20), reset = reset,
+        strategy = PageRank.GridBlocks(3)).ranks, "rank")
+      base.indices.foreach { i =>
+        assert(math.abs(base(i) - grid(i)) < 1e-12, s"grid differs at $i: ${grid(i)} vs ${base(i)}")
+      }
+    }
+  }
+
+  test("default strategy: grid when numVertices is set, edge-join when it is not") {
+    val dense = randomGraph(300, 2500)
+    def sites(g: LinkGraph): Seq[String] =
+      EventTap(spark.sparkContext)(PageRank.run(g, maxIter = 3).ranks.count())._2.stageNames
+    assert(sites(dense).exists(_.contains("PageRankGrid.scala")))
+    val open = sites(dense.copy(numVertices = None))
+    assert(!open.exists(_.contains("PageRankGrid.scala")))
+    assert(open.exists(_.contains("PageRank.scala")))
+  }
+
+  test("a snapshot resumes on either strategy and matches the uninterrupted run to 1e-8") {
+    val g = randomGraph(300, 2500)
+    val full = TestSession.vector(
+      PageRank.run(g, tol = 1e-10, maxIter = 100, strategy = PageRank.EdgeJoin).ranks, "rank")
+    val pairs = Seq(PageRank.EdgeJoin -> PageRank.GridBlocks(5), PageRank.GridBlocks(5) -> PageRank.EdgeJoin)
+    for ((first, second) <- pairs) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      val store = new CheckpointStore(dir, "cut")
+      PageRank.run(g, tol = 1e-10, maxIter = 100, fixedIters = Some(4), store = Some(store), strategy = first)
+      assert(store.latestIter(spark).contains(4))
+      val resumed = TestSession.vector(
+        PageRank.resume(g, store, tol = 1e-10, maxIter = 100, strategy = second).ranks, "rank")
+      full.indices.foreach { i =>
+        assert(math.abs(full(i) - resumed(i)) < 1e-8, s"$first -> $second differs at $i")
+      }
+    }
   }
 }
